@@ -7,10 +7,10 @@ perfbench/README.md).  The run:
 
 * makes a private scratch directory under .perfbench_work/ holding the Spark
   local dirs, warehouse, event log and temp files, and deletes it at the end;
-* starts perfbench/worker.py as a fresh process in its own process group and
-  samples the resident memory of that group (the driver Python, the JVM and
-  the Python workers) from /proc in one thread;
-* waits until every process of the group has exited;
+* starts perfbench/worker.py as a fresh process and samples the resident
+  memory of its process tree (the driver Python, the JVM, PySpark's worker
+  daemon and the Python workers) from /proc in one thread;
+* waits until every process of that tree has exited;
 * prints, as the last line of stdout, one JSON object with `correct`,
   `attempted`, `failed` and `metrics` (end-to-end metrics with --trace 0,
   per-layer metrics with --trace 1).
@@ -32,13 +32,14 @@ import threading
 import time
 
 WORKLOADS = ("docs_join", "polygon_algebra")
-TIMEOUT_S = 150
+TIMEOUT_S = 165
 DRIVER_MEM = "2g"
 PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
-def group_pids(pgid: int) -> list[int]:
-    pids = []
+def _proc_table() -> dict[int, tuple[int, str]]:
+    """{pid: (ppid, start time)} of every process in /proc."""
+    table = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
@@ -47,49 +48,82 @@ def group_pids(pgid: int) -> list[int]:
                 stat = f.read()
         except OSError:
             continue
-        # fields after the parenthesised command: state ppid pgrp ...
-        if int(stat.rsplit(")", 1)[1].split()[2]) == pgid:
-            pids.append(int(name))
-    return pids
+        # fields after the parenthesised command: state ppid ...; the
+        # start time is field 22, the 20th after the command
+        fields = stat.rsplit(")", 1)[1].split()
+        table[int(name)] = (int(fields[1]), fields[19])
+    return table
 
 
-def group_rss_bytes(pgid: int) -> int:
-    total = 0
-    for pid in group_pids(pgid):
-        try:
-            with open(f"/proc/{pid}/statm", encoding="ascii") as f:
-                total += int(f.read().split()[1]) * PAGE
-        except OSError:
-            continue
-    return total
+class ProcessTree:
+    """The processes descended from one root pid.
+
+    PySpark's worker daemon moves itself and the Python workers it forks
+    into a new process group, so the tree is followed by parent pid, not
+    by group.  A process stays known once seen, also after its parent
+    exits and it is re-parented; it is matched by (pid, start time), so a
+    reused pid is not taken for it.  The sampler thread and the main thread
+    both walk the tree."""
+
+    def __init__(self, root: int):
+        self.root = root
+        self.seen: set[tuple[int, str]] = set()
+        self._lock = threading.Lock()
+
+    def alive(self) -> list[int]:
+        table = _proc_table()
+        children: dict[int, list[int]] = {}
+        for pid, (ppid, _) in table.items():
+            children.setdefault(ppid, []).append(pid)
+        stack = [self.root] if self.root in table else []
+        with self._lock:
+            while stack:
+                pid = stack.pop()
+                self.seen.add((pid, table[pid][1]))
+                stack.extend(children.get(pid, ()))
+            return [pid for pid, start in self.seen
+                    if pid in table and table[pid][1] == start]
+
+    def rss_bytes(self) -> int:
+        total = 0
+        for pid in self.alive():
+            try:
+                with open(f"/proc/{pid}/statm", encoding="ascii") as f:
+                    total += int(f.read().split()[1]) * PAGE
+            except OSError:
+                continue
+        return total
+
+    def kill(self):
+        for pid in self.alive():
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+
+    def reap(self, grace_s: float = 30.0):
+        """Wait until no process of the tree is left; kill stragglers."""
+        deadline = time.monotonic() + grace_s
+        while self.alive():
+            if time.monotonic() > deadline:
+                self.kill()
+                deadline = time.monotonic() + grace_s
+            time.sleep(0.05)
 
 
 class RssSampler(threading.Thread):
-    """Peak summed RSS of one process group, sampled every `period` s."""
+    """Peak summed RSS of a process tree, sampled every `period` s."""
 
-    def __init__(self, pgid: int, period: float = 0.1):
+    def __init__(self, tree: ProcessTree, period: float = 0.1):
         super().__init__(daemon=True)
-        self.pgid, self.period = pgid, period
+        self.tree, self.period = tree, period
         self.peak = 0
         self.done = threading.Event()
 
     def run(self):
         while not self.done.is_set():
-            self.peak = max(self.peak, group_rss_bytes(self.pgid))
+            self.peak = max(self.peak, self.tree.rss_bytes())
             self.done.wait(self.period)
-
-
-def reap_group(pgid: int, grace_s: float = 30.0):
-    """Wait until no process of the group is left; kill stragglers."""
-    deadline = time.monotonic() + grace_s
-    while group_pids(pgid):
-        if time.monotonic() > deadline:
-            try:
-                os.killpg(pgid, signal.SIGKILL)
-            except ProcessLookupError:
-                pass
-            deadline = time.monotonic() + grace_s
-        time.sleep(0.05)
 
 
 def main(argv=None) -> int:
@@ -147,20 +181,20 @@ def run(a, root: str, work: str) -> int:
            "--workload", a.workload, "--seed", str(a.seed),
            "--seconds", str(a.seconds), "--trace", str(a.trace),
            "--work", work, "--out", out]
-    proc = subprocess.Popen(cmd, cwd=root, env=env, stdout=sys.stderr,
-                            start_new_session=True)
-    sampler = RssSampler(proc.pid)
+    proc = subprocess.Popen(cmd, cwd=root, env=env, stdout=sys.stderr)
+    tree = ProcessTree(proc.pid)
+    sampler = RssSampler(tree)
     sampler.start()
     try:
         code = proc.wait(timeout=TIMEOUT_S)
     except subprocess.TimeoutExpired:
         print("perfbench: run timed out", file=sys.stderr)
-        os.killpg(proc.pid, signal.SIGKILL)
+        tree.kill()
         code = proc.wait()
     finally:
-        reap_group(proc.pid)
         sampler.done.set()
         sampler.join()
+        tree.reap()
     if code != 0 or not os.path.exists(out):
         print(f"perfbench: worker exited with code {code}", file=sys.stderr)
         return 1

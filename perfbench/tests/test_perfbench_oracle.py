@@ -1,7 +1,6 @@
-"""The oracles against brute force, and the pass check: a wrong answer or a
-raising pass counts as failed.  No Spark session is started."""
+"""The oracle fingerprints and the pass check: a wrong answer or a raising
+pass counts as failed.  No Spark session is started."""
 
-import numpy as np
 import pandas as pd
 
 from perfbench import workloads as W
@@ -9,39 +8,25 @@ from perfbench.trace import NullTracer
 from perfbench.worker import Run
 
 
-def test_polygon_oracle_matches_all_pairs(tmp_path):
+def test_duckdb_fingerprint_definition():
+    con = W._duck({})
+    q = ("SELECT * FROM (VALUES (1, 2.0), (5, 3.0), "
+         f"(CAST({W.P} AS BIGINT) + 2, 4.0)) t(k, v)")
+    # rows, sum of key mod P, sum of values, sum of value * (key mod 1009)
+    assert W._duck_fingerprint(con, q, "k") == (3, 1 + 5 + 2)
+    assert W._duck_fingerprint(con, q, "k", "v") == (
+        3, 8, 9.0, 2.0 * 1 + 3.0 * 5 + 4.0 * ((W.P + 2) % 1009))
+
+
+def test_polygon_oracle_covers_every_shape(tmp_path):
     wl = W.PolygonAlgebra()
     wl.make_inputs(str(tmp_path), seed=3)
     got = wl.expected(str(tmp_path))
-    a, b = np.load(tmp_path / "a.npy"), np.load(tmp_path / "b.npy")
-    _, ra = W._la(a)
-    _, rb = W._lb(b)
-    ai, bi = np.repeat(np.arange(len(a)), len(b)), np.tile(np.arange(len(b)),
-                                                          len(a))
-    area = sum(W._rect_overlap(x[ai], y[bi]) for x in ra for y in rb)
-    hit = area > 0
-    assert hit.sum() > len(a) // 2
-    assert got["overlay"] == W._np_fingerprint(
-        a[ai][hit] * 1000003 + b[bi][hit], area[hit])
-
-
-def test_docs_oracle_matches_all_pairs(tmp_path):
-    wl = W.DocsJoin()
-    wl.make_inputs(str(tmp_path), seed=5)
-    got = wl.expected(str(tmp_path))
-    idx = np.load(tmp_path / "doc_index.npy")
-    zid = pd.read_parquet(tmp_path / "zones").zone_id.to_numpy()
-    px, py = wl._points(idx)
-    cx, cy, r = wl._zone(zid)
-    inside = ((np.abs(px[:, None] - cx) <= r) &
-              (np.abs(py[:, None] - cy) <= r))
-    d, z = np.nonzero(inside)
-    assert got["pip"] == W._np_fingerprint(idx[d] * 1000003 + zid[z])
-    d2 = np.sort((px[:, None] - cx) ** 2 + (py[:, None] - cy) ** 2,
-                 axis=1)[:, :3]
-    keys = idx[:, None] * 131 + np.arange(1, 4) * 1000003 + d2
-    assert got["knn"] == W._np_fingerprint(keys.ravel())
-    assert sum(got["tiles"].values()) == len(idx)
+    n_a = len(pd.read_parquet(tmp_path / "a"))
+    assert n_a == wl.A_ROWS * 40
+    # one buffered part per A shape; most A shapes meet a B shape
+    assert got["buffdiss"][0] == n_a
+    assert got["overlay"][0] > n_a // 2
 
 
 def test_seed_fixes_inputs(tmp_path):

@@ -37,6 +37,10 @@ LAYERS = (
     "knn.get_k_nearest_neighbors",
     "overlay.clean_overlay",
     "dissolve.buffdissexp",
+    "cleaning.coverage_clean",
+    "network.od_cost_matrix",
+    "textops.near_dup_pairs",
+    "vecops.cosine_topk_lsh",
 )
 # Per-layer figures reported for every layer but session.get_spark, which
 # runs no jobs and gets wall_s only.
@@ -273,12 +277,13 @@ def summarise(passes: list[dict[str, dict[str, float]]]):
     return med, exact
 
 
-def layer_table(med, exact, traced_pass_s: float, untraced_pass_s: float,
-                unattributed_s: float) -> str:
+def layer_table(med, exact, traced_pass_s: float,
+                untraced_pass_s: float | None, unattributed_s: float) -> str:
     """Markdown table of span self-times with reconciliation and flags.
 
     `unattributed_s` is the median over traced passes of the pass wall
-    minus the sum of its spans' self-times."""
+    minus the sum of its spans' self-times.  Without `untraced_pass_s`
+    (a section that runs traced only) no tracing overhead is given."""
     rows = sorted(med.items(), key=lambda kv: -kv[1]["self_s"])
     lines = [
         "| span | self_s | share | driver_s | task_run_s | task_cpu_s | "
@@ -303,8 +308,12 @@ def layer_table(med, exact, traced_pass_s: float, untraced_pass_s: float,
         f"by any span (median per pass): {unattributed_s:.3f} s "
         f"({unattributed_s / traced_pass_s:.1%}), so the span self-times "
         f"reconcile with the pass wall to that share",
-        f"- untraced pass_s (median, same run): {untraced_pass_s:.3f} s; "
-        f"tracing overhead: {traced_pass_s - untraced_pass_s:+.3f} s",
+    ]
+    if untraced_pass_s is not None:
+        lines.append(
+            f"- untraced pass_s (median, same run): {untraced_pass_s:.3f} s; "
+            f"tracing overhead: {traced_pass_s - untraced_pass_s:+.3f} s")
+    lines += [
         f"- top layers: {', '.join(layers[:3])}",
         "- counts marked ~ did not repeat exactly across the traced passes "
         "(the median is shown)",

@@ -12,7 +12,10 @@ directories and samples its memory.  Protocol:
 4. timed passes until ``--seconds`` have passed (at least MIN_PASSES);
    with ``--trace 1`` untraced and traced passes alternate, and the traced
    ones give the per-layer figures;
-5. stop the session and wait for the JVM to exit.
+5. with ``--trace 1``, the workload's traced-only section, if it has one
+   (``workloads.TRACED_ONLY``): one untraced pass, then SECTION_PASSES
+   traced ones;
+6. stop the session and wait for the JVM to exit.
 
 Every pass is checked against the oracle; a pass that raises or returns a
 wrong answer counts as failed.
@@ -30,11 +33,12 @@ import time
 import traceback
 
 from perfbench import trace as T
-from perfbench.workloads import WORKLOADS, compare
+from perfbench.workloads import TRACED_ONLY, WORKLOADS, compare
 
 SETUPS = 3
 WARMUP = 1
 MIN_PASSES = 3
+SECTION_PASSES = 3
 # local[3]: the fourth core stays with the driver JVM and Python, which
 # plan and launch the many short jobs; passes were steadier than at local[4]
 CORES = min(3, os.cpu_count() or 1)
@@ -103,10 +107,15 @@ def main(argv=None) -> int:
     from sgspark.session import get_spark
 
     wl = WORKLOADS[a.workload]
+    section = TRACED_ONLY.get(a.workload) if a.trace else None
     t0 = time.perf_counter()
     inputs = tempfile.mkdtemp(prefix="inputs-", dir=a.work)
     wl.make_inputs(inputs, a.seed)
     expected = wl.expected(inputs)
+    if section:
+        section_inputs = tempfile.mkdtemp(prefix="section-", dir=a.work)
+        section.make_inputs(section_inputs)
+        section_run = Run(section, section.expected(section_inputs))
     input_gen_s = time.perf_counter() - t0
     log(f"{a.workload}: inputs and oracle in {input_gen_s:.2f} s")
 
@@ -149,6 +158,22 @@ def main(argv=None) -> int:
             paths.append({k: joins.PATH_STATS[k] - before.get(k, 0)
                           for k in T.JOIN_PATHS})
     log("timed passes done: " + " ".join(f"{x:.2f}" for x in untraced))
+    section_walls, section_passes = [], []
+    if section:
+        sinp = section.register(spark, section_inputs)
+        t0 = time.perf_counter()
+        section_run.one_pass(spark, sinp, T.NullTracer())
+        log(f"{section.name} untraced pass: {time.perf_counter() - t0:.2f} s")
+        for i in range(SECTION_PASSES):
+            tr = T.Tracer(sc, f"s{i}")
+            t0 = time.time()
+            section_run.one_pass(spark, sinp, tr)
+            section_walls.append(time.time() - t0)
+            section_passes.append(tr.spans)
+        log(f"{section.name} traced passes: "
+            + " ".join(f"{x:.2f}" for x in section_walls))
+        run.attempted += section_run.attempted
+        run.failed += section_run.failed
     stop_session(spark)
     log("session stopped")
 
@@ -175,6 +200,18 @@ def main(argv=None) -> int:
         table = T.layer_table(med, exact, traced_s, pass_s, unattributed_s)
         log(f"{a.workload} layer table ({len(traced)} traced passes):\n"
             + table)
+        if section:
+            s_med, s_exact = T.summarise(
+                [T.pass_figures(spans, tasks) for spans in section_passes])
+            log(f"{section.name} layer table ({len(section_walls)} traced "
+                "passes):\n" + T.layer_table(
+                    s_med, s_exact, statistics.median(section_walls), None,
+                    statistics.median(
+                        wall - sum(sp.self_s for sp in spans) for wall, spans
+                        in zip(section_walls, section_passes))))
+            # only the LAYERS are reported, and the section's differ from
+            # the workload's
+            med = {**s_med, **med}
         m = {"session.get_spark.wall_s": (statistics.median(get_spark_s), "s"),
              "setup.first_s": (setup[0], "s")}
         for layer in T.LAYERS[1:]:
@@ -191,6 +228,9 @@ def main(argv=None) -> int:
         m["trace.overhead_s"] = (traced_s - pass_s, "s")
         m["trace.unattributed_s"] = (unattributed_s, "s")
         m["input.gen_s"] = (input_gen_s, "s")
+        # traced small_jobs pass wall; 0 where the workload hosts none
+        m["small_jobs.pass_s"] = (statistics.median(section_walls)
+                                  if section_walls else 0, "s")
         result["metrics"] = m
     with open(a.out, "w", encoding="utf-8") as f:
         json.dump(result, f)

@@ -4,15 +4,17 @@ Each workload has:
 
 * ``make_inputs(dir, seed)``: writes its input tables as parquet, from the
   seed alone, before any clock starts;
-* ``expected(dir)``: the answer from an oracle that does not run the engine
-  (numpy arithmetic on the generating formulas);
+* ``expected(dir)``: the answer of the repository's DuckDB oracle
+  (``__spark_entry__.oracle_sql``) run over the same parquet files, so the
+  engine is not involved;
 * ``register(spark, dir)``: reads the inputs into DataFrames;
 * ``run_pass(spark, inputs, tracer)``: one pass through the engine's public
   layers, returning an answer in the same shape as ``expected``.
 
 Answers are small: per-tile counts, or order-free fingerprints (row count,
-modular key sums, exact sums of integer-valued areas) aggregated in Spark,
-so checking a pass costs one small collect per layer.
+modular key sums, exact sums of integer-valued numbers), aggregated in
+Spark for the pass and in DuckDB for the oracle, so checking a pass costs
+one small collect per layer.
 """
 
 from __future__ import annotations
@@ -57,13 +59,29 @@ def _fingerprint(df, key_expr: str, value_col: str | None = None) -> tuple:
     return tuple(0 if v is None else v for v in row)
 
 
-def _np_fingerprint(key: np.ndarray, value: np.ndarray | None = None) -> tuple:
-    key = key.astype(np.int64)
-    out = (int(len(key)), int((key % P).sum()))
-    if value is not None:
-        value = value.astype(np.float64)
-        out += (float(value.sum()), float((value * (key % 1009)).sum()))
-    return out
+def _duck(views: dict[str, str]):
+    """A DuckDB connection with each {name: SELECT} registered as a view."""
+    import duckdb
+    con = duckdb.connect()
+    for name, sql in views.items():
+        con.execute(f"CREATE VIEW {name} AS {sql}")
+    return con
+
+
+def _duck_fingerprint(con, query: str, key_expr: str,
+                      value_col: str | None = None) -> tuple:
+    """`_fingerprint` of an oracle query's result, computed in DuckDB."""
+    aggs = f"count(*), sum(({key_expr}) % {P})"
+    if value_col:
+        aggs += (f", sum(CAST({value_col} AS DOUBLE)), "
+                 f"sum(CAST({value_col} AS DOUBLE) * (({key_expr}) % 1009))")
+    row = con.execute(f"SELECT {aggs} FROM ({query}) q").fetchone()
+    return tuple(0 if v is None else (int(v) if i < 2 else float(v))
+                 for i, v in enumerate(row))
+
+
+def _parquet(path: str) -> str:
+    return f"read_parquet('{path}/*.parquet')"
 
 
 # ==========================================================================
@@ -74,8 +92,9 @@ class DocsJoin:
 
     Inputs: N_DOCS documents with the interleaved text/media spans of
     sgspark.synth, whose first media span is a point at an integer position
-    given by a formula in the doc index; N_ZONES square zones, centre and
-    half-width given by formulas in the zone key.
+    given by a formula in the doc index (``PX``/``PY`` of
+    ``__spark_entry__``); N_ZONES square zones, centre and half-width given
+    by formulas in the zone key (``ZX``/``ZY``/``ZR``).
 
     The seed picks where the runs of consecutive doc indexes and zone keys
     start.  The position formulas are modular steps, so each seed's layout
@@ -89,18 +108,8 @@ class DocsJoin:
     N_ZONES = 600
     rows = N_DOCS
 
-    @staticmethod
-    def _points(idx):
-        return (254000 + (idx * 7919 + 13) % 20000,
-                6644000 + (idx * 104729 + 7) % 18000)
-
-    @staticmethod
-    def _zone(k):
-        return (254000 + (k * 12007 + 11) % 20000,
-                6644000 + (k * 52361 + 3) % 18000,
-                200.5 + (k * 37) % 1800)
-
     def make_inputs(self, d: str, seed: int):
+        from __spark_entry__ import ZR, ZX, ZY
         from sgspark.synth import gen_documents_pdf
         rng = np.random.default_rng(seed)
         idx = int(rng.integers(0, 10_000_000)) + np.arange(self.N_DOCS)
@@ -111,55 +120,38 @@ class DocsJoin:
                        ("kind", pa.string()), ("text", pa.string()),
                        ("media_ref", pa.string()), ("offset", pa.int32())])))]))
         k = int(rng.integers(0, 1_000_000)) + np.arange(self.N_ZONES)
-        cx, cy, r = self._zone(k)
+        con = _duck({})
+        con.register("customer", pd.DataFrame({"c_custkey": k}))
 
-        def fmt(v):
-            return f"{v:.1f}"
+        def corner(sx, sy):
+            return (f"printf('%.1f %.1f', CAST({ZX} {sx} {ZR} AS DOUBLE), "
+                    f"CAST({ZY} {sy} {ZR} AS DOUBLE))")
 
-        wkt = [f"POLYGON (({fmt(x - h)} {fmt(y - h)}, {fmt(x + h)} {fmt(y - h)}, "
-               f"{fmt(x + h)} {fmt(y + h)}, {fmt(x - h)} {fmt(y + h)}, "
-               f"{fmt(x - h)} {fmt(y - h)}))" for x, y, h in zip(cx, cy, r)]
-        _write(pd.DataFrame({"zone_id": k, "cx": cx.astype(float),
-                             "cy": cy.astype(float), "geometry_wkt": wkt}),
-               f"{d}/zones", files=4)
-        np.save(f"{d}/doc_index.npy", idx)
-
-    @staticmethod
-    def _tile(x, y):
-        tx = (np.floor((x + 2000000) / 1000) * 1000).astype(np.int64)
-        ty = (np.floor(y / 1000) * 1000).astype(np.int64)
-        return pd.Series(tx.astype(str)) + pd.Series(ty.astype(str))
+        ring = ", ', ', ".join(corner(*c) for c in (
+            "--", "+-", "++", "-+", "--"))
+        zones = con.execute(f"""
+            SELECT c_custkey AS zone_id, CAST({ZX} AS DOUBLE) AS cx,
+                   CAST({ZY} AS DOUBLE) AS cy,
+                   concat('POLYGON ((', {ring}, '))') AS geometry_wkt
+            FROM customer ORDER BY c_custkey""").df()
+        _write(zones, f"{d}/zones", files=4)
 
     def expected(self, d: str) -> dict:
-        idx = np.load(f"{d}/doc_index.npy")
-        zones = pd.read_parquet(f"{d}/zones")
-        px, py = self._points(idx)
-        tiles = self._tile(px, py).value_counts()
-        tile_counts = {str(t): int(n) for t, n in tiles.items()}
-        # point-in-square pairs: x-sorted points, one window per zone
-        order = np.argsort(px, kind="stable")
-        xs, ys, ids = px[order], py[order], idx[order]
-        keys = []
-        for zid, cx, cy, r in zip(zones.zone_id, *self._zone(zones.zone_id.to_numpy())):
-            lo = np.searchsorted(xs, cx - r)
-            hi = np.searchsorted(xs, cx + r, side="right")
-            hit = np.abs(ys[lo:hi] - cy) <= r
-            keys.append(ids[lo:hi][hit] * 1000003 + zid)
-        pip = _np_fingerprint(np.concatenate(keys))
-        # k=3 nearest zone centres: only the distances enter the answer, so
-        # equal-distance ties do not matter
-        zx, zy, _ = self._zone(zones.zone_id.to_numpy())
-        knn_keys = []
-        for s in range(0, len(idx), 4096):
-            dx = px[s:s + 4096, None] - zx[None, :]
-            dy = py[s:s + 4096, None] - zy[None, :]
-            d2 = np.sort(np.partition(dx * dx + dy * dy, 2, axis=1)[:, :3],
-                         axis=1)
-            rank = np.arange(1, 4)[None, :]
-            knn_keys.append((idx[s:s + 4096, None] * 131 + rank * 1000003
-                             + d2).ravel())
-        return {"tiles": tile_counts, "gridloop": tile_counts, "pip": pip,
-                "knn": _np_fingerprint(np.concatenate(knn_keys))}
+        from __spark_entry__ import oracle_sql
+        q = oracle_sql()
+        con = _duck({
+            "documents": f"SELECT doc_index AS doc_id FROM {_parquet(d + '/docs')}",
+            "customer": f"SELECT zone_id AS c_custkey FROM {_parquet(d + '/zones')}",
+        })
+        tiles = {t: int(n) for t, n in
+                 con.execute(q["tile_assign"]).fetchall()}
+        return {
+            "tiles": tiles, "gridloop": tiles,
+            "pip": _duck_fingerprint(con, q["pip_join"],
+                                     "doc_id * 1000003 + zone_id"),
+            "knn": _duck_fingerprint(con, q["knn"],
+                                     "doc_id * 131 + k_rank * 1000003 + d2"),
+        }
 
     def register(self, spark, d: str) -> dict:
         return {"docs": spark.read.parquet(f"{d}/docs"),
@@ -204,6 +196,8 @@ class DocsJoin:
             return {
                 "tiles": tiles, "gridloop": grid,
                 "pip": _fingerprint(pairs, "doc_index * 1000003 + zone_id"),
+                # only the distances enter the answer, so equal-distance
+                # ties cannot make a wrong answer
                 "knn": _fingerprint(nn.selectExpr(
                     "doc_id * 131 + k * 1000003 + "
                     "cast(round(distance * distance) as bigint) AS key"),
@@ -224,39 +218,13 @@ def per_cell_count(cell: pd.DataFrame) -> pd.DataFrame:
 # ==========================================================================
 # polygon_algebra: concave overlay and buffer-dissolve-explode
 # ==========================================================================
-def _lshape(k: np.ndarray, x0, y0, s, aa, bb):
-    """Rectangles and WKT of the L-shapes [x0,x0+s]x[y0,y0+bb] u
-    [x0,x0+aa]x[y0+bb,y0+s] (the __spark_entry__ _lshape_layers formulas)."""
-    wkt = [f"POLYGON (({a} {b}, {a + c} {b}, {a + c} {b + e}, {a + f} {b + e}, "
-           f"{a + f} {b + c}, {a} {b + c}, {a} {b}))"
-           for a, b, c, f, e in zip(x0, y0, s, aa, bb)]
-    rects = (np.stack([x0, y0, x0 + s, y0 + bb], 1),
-             np.stack([x0, y0 + bb, x0 + aa, y0 + s], 1))
-    return wkt, rects
-
-
-def _la(k):
-    return _lshape(k, (k % 40) * 100, (k // 40) * 100, 80 + (k % 5) * 4,
-                   40 + (k % 3) * 8, 32 + (k % 7) * 6)
-
-
-def _lb(k):
-    return _lshape(k, (k % 10) * 390 + 15, (k // 10) * 370 + 21,
-                   200 + (k % 4) * 30, 100 + (k % 3) * 20, 80 + (k % 5) * 24)
-
-
-def _rect_overlap(r1: np.ndarray, r2: np.ndarray) -> np.ndarray:
-    w = np.minimum(r1[:, 2], r2[:, 2]) - np.maximum(r1[:, 0], r2[:, 0])
-    h = np.minimum(r1[:, 3], r2[:, 3]) - np.maximum(r1[:, 1], r2[:, 1])
-    return np.maximum(w, 0) * np.maximum(h, 0)
-
-
 class PolygonAlgebra:
     """Concave L-shape layers A (pitch 100, 40 per row) and B (pitch
-    390 x 370, 10 per row) over one seeded band of rows, so that both sides
-    of the distributed cell join are large.  B's shapes are pairwise
-    disjoint, and so are A's after a 1.5 buffer, which gives exact integer
-    oracles for the intersection areas and the buffered areas."""
+    390 x 370, 10 per row): the ``_lshape_layers`` formulas of
+    ``__spark_entry__`` over one seeded band of rows, so that both sides of
+    the distributed cell join are large.  B's shapes are pairwise disjoint,
+    and so are A's after a 1.5 buffer, which gives the exact integer
+    oracles ``overlay_concave`` and ``buffdiss``."""
 
     name = "polygon_algebra"
     A_ROWS = 40                              # 40 A-shapes per row
@@ -272,34 +240,31 @@ class PolygonAlgebra:
         return a, np.arange(10 * rb0, 10 * rb0 + self.N_B, dtype=np.int64)
 
     def make_inputs(self, d: str, seed: int):
+        from __spark_entry__ import _LA, _LB, _lshape_layer_sql
         a, b = self._keys(seed)
-        _write(pd.DataFrame({"aid": a, "geometry_wkt": _la(a)[0]}),
-               f"{d}/a", files=4)
-        _write(pd.DataFrame({"bid": b, "geometry_wkt": _lb(b)[0]}),
-               f"{d}/b", files=4)
-        np.save(f"{d}/a.npy", a)
-        np.save(f"{d}/b.npy", b)
+        con = _duck({})
+        for key, layer, keys, out in (("c_custkey", _LA, a, "aid"),
+                                      ("s_suppkey", _LB, b, "bid")):
+            con.register("keys", pd.DataFrame({key: keys}))
+            wkt = _lshape_layer_sql(
+                key, **{k: v.replace("div", "//") for k, v in layer.items()})
+            _write(con.execute(f"SELECT {key} AS {out}, {wkt} AS geometry_wkt "
+                               f"FROM keys ORDER BY {key}").df(),
+                   f"{d}/{out[0]}", files=4)
 
     def expected(self, d: str) -> dict:
-        a, b = np.load(f"{d}/a.npy"), np.load(f"{d}/b.npy")
-        _, ra = _la(a)
-        # candidate B shapes: the 3 x 3 B grid cells from the first one
-        # that can reach each A shape (A extent <= 96; B pitch 390 x 370,
-        # extent <= 290, so at most 1 column and 2 rows of B can overlap)
-        off = np.arange(9)
-        col = (((a % 40) * 100 - 305) // 390)[:, None] + off % 3
-        row = (((a // 40) * 100 - 311) // 370)[:, None] + off // 3
-        bid = row * 10 + col
-        ok = (col >= 0) & (col < 10) & np.isin(bid, b)
-        ai = np.repeat(np.arange(len(a)), 9)[ok.ravel()]
-        bk = bid.ravel()[ok.ravel()]
-        _, rb = _lb(bk)
-        area = sum(_rect_overlap(x[ai], y) for x in ra for y in rb)
-        hit = area > 0
-        inter = _np_fingerprint(a[ai][hit] * 1000003 + bk[hit], area[hit])
-        s, aa, bb = 80 + (a % 5) * 4, 40 + (a % 3) * 8, 32 + (a % 7) * 6
-        adj = s * bb + aa * (s - bb) + 6 * s     # area + perimeter * 1.5
-        return {"overlay": inter, "buffdiss": _np_fingerprint(a // 40, adj)}
+        from __spark_entry__ import oracle_sql
+        q = oracle_sql()
+        con = _duck({
+            "customer": f"SELECT aid AS c_custkey FROM {_parquet(d + '/a')}",
+            "supplier": f"SELECT bid AS s_suppkey FROM {_parquet(d + '/b')}",
+        })
+        return {
+            "overlay": _duck_fingerprint(con, q["overlay_concave"],
+                                         "aid * 1000003 + bid", "area"),
+            "buffdiss": _duck_fingerprint(con, q["buffdiss"], "band",
+                                          "adj_area"),
+        }
 
     def register(self, spark, d: str) -> dict:
         par = spark.sparkContext.defaultParallelism
@@ -358,4 +323,135 @@ def _adj_area_rows(parts, r: float):
         kernel, schema="band long, adj_area double")
 
 
+# ==========================================================================
+# small_jobs: job-latency-bound layers, run in traced runs only
+# ==========================================================================
+class SmallJobs:
+    """``cleaning.coverage_clean``, ``network.od_cost_matrix``,
+    ``textops.near_dup_pairs`` and ``vecops.cosine_topk_lsh`` on small
+    fixed tables.  Kernels do little here; per-job latency, driver probes
+    and materialisation set the time.
+
+    The inputs do not depend on the seed:
+
+    * ``documents``: N_TEXT texts of 30-69 words from a 500-word vocabulary;
+      every tenth is its predecessor with one word replaced, so near
+      duplicates exist;
+    * ``embeddings``: N_VEC integer-valued 64-d vectors (stored / 1000) in
+      clusters of 10 around random centres, so every true top-5 neighbour
+      shares an LSH bucket with its vector;
+    * ``supplier``: keys 1..N_NODES, the ``_supplier_graph`` road graph;
+    * ``nation``: keys 0..24, the ``_coverage_fixture`` dirty coverage.
+
+    This section runs only in traced runs of the host workload: run in
+    every pass, its ~10 s (warm) would not fit the benchmark's run-time
+    budget (see README.md).
+    """
+
+    name = "small_jobs"
+    N_TEXT = 300
+    N_VEC = 300
+    N_NODES = 200
+    LSH_TABLES = 8
+
+    def make_inputs(self, d: str):
+        rng = np.random.default_rng(0)
+        vocab = np.array([f"w{i:03d}" for i in range(500)])
+        texts = []
+        for i in range(self.N_TEXT):
+            if i % 10 == 9:
+                words = texts[-1].split()
+                words[int(rng.integers(0, len(words)))] = "zz"
+                texts.append(" ".join(words))
+            else:
+                texts.append(" ".join(rng.choice(vocab,
+                                                 int(rng.integers(30, 70)))))
+        pq.write_table(pa.table({
+            "doc_id": np.arange(self.N_TEXT, dtype=np.int64),
+            "text": texts}), f"{d}/documents.parquet")
+        centres = rng.integers(-1000, 1001, (self.N_VEC // 10, 64))
+        vecs = np.clip(np.repeat(centres, 10, axis=0)
+                       + rng.integers(-150, 151, (self.N_VEC, 64)),
+                       -1000, 1000)
+        pq.write_table(pa.table({
+            "vec_id": np.arange(self.N_VEC, dtype=np.int64),
+            "embedding": pa.array(list((vecs / 1000).astype(np.float32)),
+                                  type=pa.list_(pa.float32()))}),
+            f"{d}/embeddings.parquet")
+        pq.write_table(pa.table({
+            "s_suppkey": np.arange(1, self.N_NODES + 1, dtype=np.int64)}),
+            f"{d}/supplier.parquet")
+        pq.write_table(pa.table({
+            "n_nationkey": np.arange(25, dtype=np.int32)}),
+            f"{d}/nation.parquet")
+
+    def expected(self, d: str) -> dict:
+        from __spark_entry__ import oracle_sql
+        q = oracle_sql()
+        con = _duck({t: f"SELECT * FROM read_parquet('{d}/{t}.parquet')"
+                     for t in ("documents", "embeddings", "supplier",
+                               "nation")})
+        return {
+            "near_dup": _duck_fingerprint(
+                con, f"SELECT *, round(jaccard * 1000000) AS j "
+                     f"FROM ({q['near_dup_pairs']})", "a * 1000003 + b", "j"),
+            "topk": _duck_fingerprint(
+                con, f"SELECT *, round(sim * 1000000) AS s "
+                     f"FROM ({q['ann_lsh']})",
+                "vec_id * 1000003 + neighbor_id * 11 + k_rank", "s"),
+            "od": _duck_fingerprint(con, q["route_costs"], "did", "cost"),
+            "coverage": _duck_fingerprint(con, q["coverage_clean"], "pid",
+                                          "area"),
+        }
+
+    def register(self, spark, d: str) -> dict:
+        return {"dir": d,
+                "docs": spark.read.parquet(f"{d}/documents.parquet"),
+                "vecs": spark.read.parquet(f"{d}/embeddings.parquet")}
+
+    def run_pass(self, spark, inp: dict, tr) -> dict:
+        from __spark_entry__ import (_area_rows, _coverage_fixture,
+                                     _supplier_graph)
+        from sgspark.cleaning import coverage_clean
+        from sgspark.network import od_cost_matrix
+        from sgspark.textops import near_dup_pairs
+        from sgspark.vecops import cosine_topk_lsh
+
+        d = inp["dir"]
+        with tr.span("textops.near_dup_pairs") as sp:
+            dups = sp.out(near_dup_pairs(inp["docs"], threshold=0.5))
+        with tr.span("vecops.cosine_topk_lsh") as sp:
+            topk = sp.out(cosine_topk_lsh(inp["vecs"], 5, n_bits=2,
+                                          n_tables=self.LSH_TABLES))
+        with tr.span("network.od_cost_matrix") as sp:
+            od = sp.out(od_cost_matrix(
+                _supplier_graph(spark, d),
+                spark.createDataFrame(pd.DataFrame({"oid": ["o1"],
+                                                    "node": ["1"]})),
+                spark.read.parquet(f"{d}/supplier.parquet").selectExpr(
+                    "cast(s_suppkey as long) AS did",
+                    "cast(s_suppkey as string) AS node"),
+                max_iter=30))
+        with tr.span("cleaning.coverage_clean") as sp:
+            cov = sp.out(coverage_clean(_coverage_fixture(spark, d), 3.0,
+                                        id_col="pid", gridsize=300.0))
+        with tr.span("bench.check"):
+            return {
+                "near_dup": _fingerprint(
+                    dups.selectExpr("a", "b", "round(jaccard * 1000000) AS j"),
+                    "a * 1000003 + b", "j"),
+                "topk": _fingerprint(
+                    topk.selectExpr("vec_id", "neighbor_id", "k_rank",
+                                    "round(sim * 1000000) AS s"),
+                    "vec_id * 1000003 + neighbor_id * 11 + k_rank", "s"),
+                "od": _fingerprint(od.selectExpr(
+                    "did", "cast(cost as double) AS cost"), "did", "cost"),
+                "coverage": _fingerprint(
+                    _area_rows(cov.select("pid", "geometry"), ["pid"]),
+                    "pid", "area"),
+            }
+
+
 WORKLOADS = {w.name: w for w in (DocsJoin(), PolygonAlgebra())}
+# sections that run only in traced runs of the named workload
+TRACED_ONLY = {"polygon_algebra": SmallJobs()}
